@@ -11,6 +11,17 @@ import org.apache.spark.sql.functions._
   * Python UDFs are native Column expressions ([[Functions]]), no interleaved
   * show()/count() actions re-running the lineage, and each output is
   * computed once.
+  *
+  * playback_hist is one keyed aggregation, not the reference's four steps
+  * (dedup the tracks, explode and regroup the artists, left-join the two
+  * on (played_at, id), dedup the joined rows). A daily document is ~50
+  * plays, so each Spark job costs scheduling and planning time, not rows, and
+  * three of the four steps' jobs were redundant: the tracks' dedup and the
+  * artists' regroup shuffle on the same key, so one aggregation does both;
+  * the join only re-attached a per-key bag to that key's rows, so its
+  * broadcast job goes; and the rows of each key are already distinct, so
+  * the post-join dedup shuffle goes. Writing playback_hist now runs the
+  * aggregation, the sort's sampling and shuffle, and the write.
   */
 object CleanZone {
 
@@ -55,52 +66,6 @@ object CleanZone {
         col("artists_exploded.uri").as("artist_uri"))
       .dropDuplicates()
 
-  /** bagged artists — re-nest the exploded artists into a JSON-string array
-    * per play, then regex the names/ids back out ", "-joined
-    * (reference: playback_pipeline.py:161-193; the regex-over-JSON quirk is
-    * preserved, natively — SURVEY §2.9 F9).
-    */
-  def bagArtists(df: DataFrame): DataFrame =
-    items(df)
-      .select(col("played_at"), col("track.id").as("id"),
-        explode(col("track.artists")).as("artists_exploded"))
-      .select(
-        col("played_at"), col("id"),
-        col("artists_exploded.name").as("artist_name"),
-        col("artists_exploded.id").as("artist_id"),
-        col("artists_exploded.uri").as("artist_uri"))
-      .groupBy(col("played_at"), col("id"))
-      .agg(to_json(collect_list(struct(
-        col("artist_name"), col("artist_id"), col("artist_uri")))).as("bagged_artists"))
-      .withColumn("artist_names", Functions.valuesFromKey(col("bagged_artists"), "artist_name"))
-      .withColumn("artist_ids", Functions.valuesFromKey(col("bagged_artists"), "artist_id"))
-
-  /** tracks — flatten track + album fields, derive durations, complete bare
-    * years (reference: playback_pipeline.py:196-225). */
-  def parseTracks(df: DataFrame): DataFrame =
-    items(df)
-      .select(
-        col("played_at"),
-        col("track.album").as("album"),
-        col("track.artists").as("artists"),
-        col("track.duration_ms").as("duration_ms"),
-        col("track.href").as("track_href"),
-        col("track.id").as("track_id"),
-        col("track.name").as("track_name"),
-        col("track.popularity").as("popularity"),
-        col("track.type").as("type"),
-        col("track.uri").as("track_uri"))
-      .select(col("*"),
-        col("album.id").as("album_id"),
-        col("album.name").as("album_name"),
-        col("album.release_date").as("album_release_date"),
-        col("album.uri").as("album_uri"))
-      .drop("album")
-      .withColumn("duration_s", Functions.durationSeconds(col("duration_ms")))
-      .withColumn("duration_min", Functions.durationMinutes(col("duration_ms")))
-      .withColumn("album_release_date", Functions.completeYear(col("album_release_date")))
-      .dropDuplicates()
-
   /** The 15-column playback_hist output contract, exact order
     * (reference: playback_pipeline.py:289-307; SURVEY §1.5). */
   val outputCols: Seq[String] = Seq(
@@ -109,27 +74,59 @@ object CleanZone {
     "artist_names", "artist_ids", "popularity",
     "album_id", "album_name", "album_release_date", "album_uri")
 
-  /** J1 — tracks LEFT JOIN bagged on the composite (played_at, track_id=id)
-    * key, duplicate-name resolution via dataframe-qualified columns
-    * (reference: playback_pipeline.py:278-307; trap SURVEY §7.4#3), then the
-    * 15-column projection, dedup, global played_at sort.
+  /** playback_hist — one keyed aggregation over the items, grouped by the
+    * play key (`played_at`, `track.id`), then the global played_at sort
+    * (reference: playback_pipeline.py:161-225,278-307).
+    *
+    * Per key, `flatten(collect_list(track.artists))` is the artist bag: it
+    * sees every item of the key, so an exactly duplicated item doubles the
+    * bag just as the reference's explode + regroup does. `collect_set` of
+    * the other 13 output columns, exploded, yields the key's distinct rows,
+    * which is what the reference's dedup → join → dedup leaves. The bag is
+    * null wherever the reference's left join finds no match: a null
+    * played_at or track.id, or no artists at all (explode drops null and
+    * empty arrays).
+    * The names and ids are still regexed out of the bag's JSON text
+    * ([[Functions.valuesFromKey]], SURVEY §2.9 F9).
     */
-  def playbackHistory(tracks: DataFrame, bagged: DataFrame): DataFrame =
-    tracks.join(bagged,
-        tracks("played_at") === bagged("played_at") &&
-          tracks("track_id") === bagged("id"), "left")
-      .select(tracks("*") +: Seq(
-        bagged("artist_names"), bagged("artist_ids"), bagged("bagged_artists")): _*)
-      .select(outputCols.map(col): _*)
-      .dropDuplicates()
+  def playbackHistory(df: DataFrame): DataFrame = {
+    val track = (f: String) => col(s"track.$f")
+    val row = struct(
+      col("played_at"),
+      track("duration_ms").as("duration_ms"),
+      Functions.durationSeconds(track("duration_ms")).as("duration_s"),
+      Functions.durationMinutes(track("duration_ms")).as("duration_min"),
+      track("href").as("track_href"),
+      track("id").as("track_id"),
+      track("name").as("track_name"),
+      track("uri").as("track_uri"),
+      track("popularity").as("popularity"),
+      track("album.id").as("album_id"),
+      track("album.name").as("album_name"),
+      Functions.completeYear(track("album.release_date")).as("album_release_date"),
+      track("album.uri").as("album_uri"))
+    val bag = col("bag")
+    val fromBag = (key: String) => Functions.valuesFromKey(col("bagged_artists"), key)
+    val bagged = when(col("played_at").isNotNull && col("track_id").isNotNull && size(bag) > 0,
+      to_json(transform(bag, a => named_struct(
+        lit("artist_name"), a("name"), lit("artist_id"), a("id"), lit("artist_uri"), a("uri")))))
+    items(df)
+      .groupBy(col("played_at"), track("id").as("track_id"))
+      .agg(flatten(collect_list(track("artists"))).as("bag"), collect_set(row).as("rows"))
+      .select(explode(col("rows")).as("row"), bagged.as("bagged_artists"))
+      .select(outputCols.map {
+        case "artist_names" => fromBag("artist_name").as("artist_names")
+        case "artist_ids" => fromBag("artist_id").as("artist_ids")
+        case c => col(s"row.$c").as(c)
+      }: _*)
       .orderBy("played_at")
+  }
 
   /** Full clean-zone job over one landing document: returns the three
     * output tables (playback_hist, albums, artists). */
   def run(spark: SparkSession, landingJsonPath: String)
       : (DataFrame, DataFrame, DataFrame) = {
     val df = readLanding(spark, landingJsonPath)
-    val playback = playbackHistory(parseTracks(df), bagArtists(df))
-    (playback, parseAlbums(df), parseArtists(df))
+    (playbackHistory(df), parseAlbums(df), parseArtists(df))
   }
 }

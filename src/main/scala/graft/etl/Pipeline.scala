@@ -1,5 +1,7 @@
 package graft.etl
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.SparkSession
 
 import graft.ingest.Fixture
@@ -15,8 +17,12 @@ object Pipeline {
   val tables: Seq[String] = Seq("playback_hist", "albums", "artists")
 
   def run(spark: SparkSession, zones: Zones, y: Int, m: Int, d: Int): Map[String, Long] = {
-    // 1. ingestion stand-in (main.py) — land the fixture document
-    val landed = Fixture.land(zones.landing(y, m, d))
+    // 1. ingestion stand-in (main.py) — land the fixture document, unless
+    //    the date already holds a landed one (a backfill replays it as is)
+    val landedDoc = Paths.get(zones.landing(y, m, d), "playback_hist.json")
+    val landed =
+      if (Files.isRegularFile(landedDoc)) landedDoc.toString
+      else Fixture.land(zones.landing(y, m, d))
 
     // 2. clean-zone job (playback_pipeline.py) — flatten to 3 tables, CSV
     val (playback, albums, artists) = CleanZone.run(spark, landed)

@@ -49,16 +49,6 @@ object Zones {
   def readParquet(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
 
-  /** K4+K5 — warehouse append with the empty-delta guard
-    * (reference: spark_jobs/playback_pipeline_curated.py:207-215). Uses
-    * `isEmpty` instead of the reference's full `count()` action — at scale
-    * that is one task over one partition, not a whole-table scan.
-    * Returns true iff rows were appended.
-    */
-  def appendWarehouse(df: DataFrame, path: String): Boolean =
-    if (df.isEmpty) false
-    else { df.write.mode("append").parquet(path); true }
-
   /** K3 — the reference's single-file naming convention: the job writes one
     * `part-*` file and renames it `{y}_{m}_{d}_{table}.{ext}`
     * (reference: move_blob, spark_jobs/playback_pipeline.py:13-63,73-86).

@@ -516,14 +516,6 @@ object EventStream {
       |GROUP BY user_id, event_type
       |ORDER BY user_id, event_type""".stripMargin
 
-  /** Drive a stream synchronously into an in-memory table (test/demo
-    * harness): returns the query name to SELECT from.
-    *
-    * Shuffle width is narrowed for the duration of the stream: stateful
-    * operators open one state store PER shuffle partition PER micro-batch,
-    * so a width sized for big batch scans (32 here) pays pure state-store
-    * overhead on these rollup-sized streams. On a real cluster this is the
-    * same dial — size it to state volume, not to scan parallelism. */
   /** Probe-only override of the per-drive stateful width (ProbeStreamWidth
     * sweeps it within one JVM); < 0 means "use the drive's own `parts`". */
   private[graft] var streamPartsOverride: Int = -1
@@ -545,6 +537,11 @@ object EventStream {
     * to state volume, never to scan parallelism. */
   private val NarrowParts = 2
 
+  /** Drive a stream synchronously into the in-memory table `name` (the
+    * harness of every streaming query), with `spark.sql.shuffle.partitions`
+    * set to the drive's stateful width `parts` (or a probe's
+    * [[streamPartsOverride]]) for the duration of the stream;
+    * [[NarrowParts]] says how to choose the width. */
   def runToMemory(df: DataFrame, name: String, mode: OutputMode,
       parts: Int = 8): Unit = {
     val spark = df.sparkSession

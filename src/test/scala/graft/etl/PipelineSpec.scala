@@ -1,6 +1,6 @@
 package graft.etl
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.types.{DateType, TimestampType}
 
@@ -108,5 +108,23 @@ class PipelineSpec extends SparkSpec {
     assert(res.keySet === Set((2024, 1, 5)))
     // playback is delta-protected on re-run
     assert(res((2024, 1, 5))("playback_hist") === 0L)
+  }
+
+  test("backfill replays each date's own landed document") {
+    val z = Zones(Files.createTempDirectory("graft_backfill_spec").toString)
+    Fixture.land(z.landing(2024, 2, 1))
+    val a = LandingDocs.artist("ar7", "Backfill Artist")
+    val al = LandingDocs.album("al7", "2010-06-01")
+    val doc2 = LandingDocs.land(z.landing(2024, 2, 2), Seq(
+      LandingDocs.item(Some("2024-02-02T08:00:00.000Z"), Some("tr7"), Some(Seq(a)), al),
+      LandingDocs.item(Some("2024-02-02T09:00:00.000Z"), Some("tr8"), Some(Seq(a)), al)))
+    val landed2 = Files.readString(Paths.get(doc2))
+
+    val res = Pipeline.runBackfill(spark, z)
+    assert(res === Map(
+      (2024, 2, 1) -> Map("playback_hist" -> 3L, "albums" -> 2L, "artists" -> 3L),
+      (2024, 2, 2) -> Map("playback_hist" -> 2L, "albums" -> 1L, "artists" -> 1L)))
+    assert(Files.readString(Paths.get(doc2)) === landed2)
+    assert(Zones.readParquet(spark, z.warehouse("playback_hist")).count() === 5)
   }
 }
