@@ -20,8 +20,16 @@ import org.apache.spark.sql.functions._
   * artists' regroup shuffle on the same key, so one aggregation does both;
   * the join only re-attached a per-key bag to that key's rows, so its
   * broadcast job goes; and the rows of each key are already distinct, so
-  * the post-join dedup shuffle goes. Writing playback_hist now runs the
-  * aggregation, the sort's sampling and shuffle, and the write.
+  * the post-join dedup shuffle goes.
+  *
+  * Every table is planned as one partition from scan to sink. The landing
+  * document is one multiline JSON file, which Spark reads as one
+  * unsplittable task anyway, so [[items]] coalesces it to one partition
+  * before the explode. That single partition satisfies the distributions
+  * that the dedups, the playback aggregation and the `played_at` sort
+  * require, so no table plans an exchange: each write is one job of one
+  * stage, and each table lands as one `part-` file (the K3 convention,
+  * [[Zones.renameSinglePartFile]]) by construction.
   */
 object CleanZone {
 
@@ -33,7 +41,7 @@ object CleanZone {
     spark.read.option("multiLine", "true").json(path)
 
   private def items(df: DataFrame): DataFrame =
-    df.select(explode(col("items")).as("items")).select("items.*")
+    df.coalesce(1).select(explode(col("items")).as("items")).select("items.*")
 
   /** albums — 9-column contract (reference: playback_pipeline.py:91-112). */
   def parseAlbums(df: DataFrame): DataFrame =

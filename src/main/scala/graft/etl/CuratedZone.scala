@@ -13,6 +13,13 @@ import org.apache.spark.sql.types.StructType
   * A daily table is a few dozen rows, so its cost is Spark jobs and
   * planning work, not rows; [[curateTable]] and [[publishTable]] say which
   * redundant jobs and recompiles they leave out, and why.
+  *
+  * Both plan every query as one partition from scan to sink, so none plans
+  * an exchange. One partition matches the traffic: a day's table comes
+  * from one landing document of at most 50 plays, read as one task. The
+  * only input that grows with history is the warehouse's key column,
+  * about 50 timestamps a day, or about 180k after ten years, which one
+  * task still hashes as a small build side.
   */
 object CuratedZone {
 
@@ -66,10 +73,13 @@ object CuratedZone {
     * (reference: …curated.py:168-179). The stamp is one constant per query,
     * so stamping after the dedup leaves the same rows; it keeps the literal
     * out of the dedup stage, whose generated code then compiles once
-    * instead of on every call.
+    * instead of on every call. The scan is coalesced to one partition, so
+    * the dedup needs no shuffle and the write is one single-stage job
+    * writing one file; the other two jobs are the CSV header and
+    * `inferSchema` reads.
     */
   def curateTable(spark: SparkSession, cleanPath: String, curatedPath: String): DataFrame = {
-    val df = addUploadTimestamp(Zones.readCsv(spark, cleanPath).dropDuplicates())
+    val df = addUploadTimestamp(Zones.readCsv(spark, cleanPath).coalesce(1).dropDuplicates())
     Zones.writeParquet(df, curatedPath)
     df
   }
@@ -86,21 +96,24 @@ object CuratedZone {
     * warehouse. A keyed table reads only the key column, under a one-field
     * schema of the day's key type: no footer-inference job, and a
     * warehouse whose key has another type fails the scan instead of
-    * silently mis-matching. The row-count guard (K5, …curated.py:207-208)
-    * counts the delta's own rows, without the single-partition aggregation
-    * stage `count()` adds; the append re-runs the delta uncached, so it
-    * writes one file as before.
+    * silently mis-matching. Both scans are coalesced to one partition and
+    * the warehouse side carries a `shuffle_hash` hint, so the dedup and the
+    * anti-join plan over single-partition children: no exchange, and no
+    * broadcast job. The row-count guard (K5, …curated.py:207-208) counts
+    * the delta's own rows with `toRdd.count()`; the append re-runs the
+    * delta uncached and writes one file. A table then costs three jobs a
+    * day: the curated Parquet footer read, the count and the append.
     */
   def publishTable(spark: SparkSession, curatedPath: String,
       warehousePath: String): Long = {
     val key = "played_at"
-    val df = normalizeReleaseDate(Zones.readParquet(spark, curatedPath))
+    val df = normalizeReleaseDate(Zones.readParquet(spark, curatedPath).coalesce(1))
       .dropDuplicates()
     val fs = FileSystem.get(new java.net.URI(warehousePath), spark.sparkContext.hadoopConfiguration)
     val delta =
       if (!df.columns.contains(key) || !fs.exists(new Path(warehousePath))) df
-      else deltaLoad(df,
-        spark.read.schema(StructType(Seq(df.schema(key)))).parquet(warehousePath), key)
+      else deltaLoad(df, spark.read.schema(StructType(Seq(df.schema(key))))
+        .parquet(warehousePath).coalesce(1).hint("shuffle_hash"), key)
     val n = delta.queryExecution.toRdd.count()
     if (n > 0) delta.write.mode("append").parquet(warehousePath)
     n

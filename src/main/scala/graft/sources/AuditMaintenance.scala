@@ -730,24 +730,26 @@ private[sources] object AuditMaintenance {
     * change a query answer — the curve key still orders every row), so
     * they are estimated from a 5% Bernoulli sample with a relaxed sketch
     * error (0.005 vs 0.001), cutting the quantile pass ~3× warm
-    * (ProbeAudit: 0.65 → 0.21 s at sf0.1). The count rides the same
-    * aggregate; a sample under ~20 rows/bucket falls back to the exact
-    * full-frame pass — small tables keep bit-identical bounds (and the
-    * fallback's extra pass is cheap precisely because the table is small).
+    * (ProbeAudit: 0.65 → 0.21 s at sf0.1). The per-column non-null counts
+    * ride the same aggregate; a sample under ~20 non-null values per bucket
+    * in any z-order column falls back to the exact full-frame pass — small
+    * or mostly-null columns keep bit-identical bounds (and the fallback's
+    * extra pass is cheap precisely because the table is small).
     * Fixed seed: bounds are deterministic for a given table state. */
   private[sources] def zQuantileBounds(df: org.apache.spark.sql.DataFrame,
       zorderBy: Seq[String], bits: Int): Array[Array[Long]] = {
     import org.apache.spark.sql.functions.{count => fcount, _}
     val probs = (1 until (1 << bits)).map(_.toDouble / (1 << bits)).toArray
     val asDouble = df.select(zorderBy.map(c => col(c).cast("double")): _*)
+    val cols = asDouble.columns.toSeq
     val minRows = (1L << bits) * 20
     val sampled = asDouble.sample(withReplacement = false, 0.05, seed = 42L)
-    val aggs = fcount(lit(1L)).as("__n") +: asDouble.columns.toSeq.map(c =>
+    val aggs = cols.map(c => fcount(col(c))) ++ cols.map(c =>
       percentile_approx(col(c), typedlit(probs.toSeq), lit(200)).as(c))
     val row = sampled.agg(aggs.head, aggs.tail: _*).head()
-    if (row.getLong(0) >= minRows && !row.anyNull)
-      asDouble.columns.indices.map(i =>
-        row.getSeq[Double](i + 1).toArray.map(_.toLong).distinct.sorted)
+    if (cols.indices.map(row.getLong).min >= minRows && !row.anyNull)
+      cols.indices.map(i =>
+        row.getSeq[Double](cols.size + i).toArray.map(_.toLong).distinct.sorted)
         .toArray
     else
       asDouble.stat.approxQuantile(asDouble.columns, probs, 0.001)

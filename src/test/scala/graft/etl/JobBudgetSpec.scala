@@ -1,10 +1,12 @@
 package graft.etl
 
 import java.nio.file.Files
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 
 import graft.SparkSpec
 import graft.ingest.Fixture
@@ -13,7 +15,9 @@ import graft.ingest.Fixture
   * calls of day two submit (`CleanZone.run`, `Zones.writeCsv` ×3,
   * `CuratedZone.curateTable` ×3, `CuratedZone.publishTable` ×3). A daily
   * batch of ~50 plays is bound by per-job planning and scheduling overhead, so
-  * the job count is the cost that matters.
+  * the job count is the cost that matters. Every zone query is planned as one
+  * partition, so no job may shuffle: each has one stage, and no task writes
+  * shuffle bytes.
   */
 class JobBudgetSpec extends SparkSpec {
   import JobBudgetSpec._
@@ -27,7 +31,8 @@ class JobBudgetSpec extends SparkSpec {
     Pipeline.tables.foreach(t => CuratedZone.publishTable(spark, z.curated(2024, 3, d, t), z.warehouse(t)))
   }
 
-  test(s"day two of the pipeline runs at most $Budget Spark jobs") {
+  /** Runs day one, then day two under the counting listener. */
+  private lazy val counted: JobCounter = {
     val z = Zones(Files.createTempDirectory("graft_job_budget").toString)
     day(z, Fixture.land(z.landing(2024, 3, 1)), 1)
     val a = LandingDocs.artist("ar9", "Day Two Artist")
@@ -51,27 +56,46 @@ class JobBudgetSpec extends SparkSpec {
       sc.setLocalProperty(PhaseKey, null)
       sc.removeSparkListener(counter)
     }
-    val jobs = counter.jobs.get
+    counter
+  }
+
+  test(s"day two of the pipeline runs at most $Budget Spark jobs") {
+    val jobs = counted.stagesPerJob.size
     info(s"day two ran $jobs Spark jobs")
     assert(jobs > 0)
     assert(jobs <= Budget)
   }
+
+  test("every Spark job of day two is one stage that writes no shuffle bytes") {
+    val multiStage = counted.stagesPerJob.asScala.filter(_._2 != 1)
+    assert(multiStage.isEmpty, "(job -> stages)")
+    assert(counted.shuffleWriteBytes.get === 0L)
+  }
 }
 
 object JobBudgetSpec {
-  /** Day two measured 38 jobs in the fused clean zone and the trimmed
-    * publish, and 47 before them; the bound leaves two jobs of slack. */
-  val Budget = 40
+  /** Day two measured 22 jobs with every zone query planned as one
+    * partition, 38 with the shuffles they had before, and 47 before the
+    * clean-zone fusion and publish trim; the bound leaves two jobs of
+    * slack. */
+  val Budget = 24
   private val PhaseKey = "graft.spec.jobBudgetPhase"
 
   private final class JobCounter extends SparkListener {
-    val jobs = new AtomicInteger
     val ended = new CountDownLatch(1)
+    val stagesPerJob = new ConcurrentHashMap[Int, Int]
+    private val countedStages = ConcurrentHashMap.newKeySet[Int]
+    val shuffleWriteBytes = new AtomicLong
     override def onJobStart(e: SparkListenerJobStart): Unit =
       Option(e.properties).map(_.getProperty(PhaseKey)) match {
-        case Some("count") => jobs.incrementAndGet()
+        case Some("count") =>
+          stagesPerJob.put(e.jobId, e.stageIds.size)
+          e.stageIds.foreach(countedStages.add)
         case Some("end") => ended.countDown()
         case _ =>
       }
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+      if (countedStages.contains(e.stageId) && e.taskMetrics != null)
+        shuffleWriteBytes.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
   }
 }

@@ -260,6 +260,17 @@ class AuditMaintenanceSpec extends SparkSpec {
     assert(ex2.getMessage.contains("not in table schema"), ex2.getMessage)
   }
 
+  test("z-order bounds take the exact pass when a column's sample is mostly null") {
+    // b is non-null on one row in 50: the 5% sample holds ~1000 rows, but
+    // only ~20 values of b, under the 80 that a 2-bit dimension needs
+    val df = spark.range(0, 20000).select(col("id").as("a"),
+      when(col("id") % 50 === 0, col("id")).as("b"))
+    val exact = df.stat.approxQuantile(Array("a", "b"), Array(0.25, 0.5, 0.75), 0.001)
+      .map(_.map(_.toLong).distinct.sorted.toSeq).toSeq
+    val bounds = AuditMaintenance.zQuantileBounds(df, Seq("a", "b"), bits = 2)
+    assert(bounds.map(_.toSeq).toSeq === exact)
+  }
+
   test("OPTIMIZE pins its snapshot: commits landing mid-compaction survive live") {
     init()
     spark.sql("DROP TABLE IF EXISTS graft_m.db.cc1")
